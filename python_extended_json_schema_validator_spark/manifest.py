@@ -1,14 +1,11 @@
 """Completed-partition manifest: resumable validation with
 per-partition lineage + metrics (north rule: "resumable from a
 checkpointed Iceberg manifest of completed partitions with
-per-partition lineage and metrics").
+per-partition lineage and metrics"), plus the exact-key ledger.
 
-Sandbox note: no Iceberg runtime jar is available here, so the
-manifest is an append-only parquet directory with the same semantics
-as an Iceberg snapshot-append (atomic at file granularity, idempotent
-via run_id + latest-wins read).  In production, swap ``_read``/
-``record`` for an Iceberg table (``.writeTo(...).append()``) — the
-engine-facing API is unchanged.
+Both are append-only ledgers (``ledger.py`` states the storage,
+SnapshotFS and crash-ordering contract once for every store); the
+manifest is idempotent via run_id + latest-wins read.
 
 Resume shape: the pending-work filter is a LEFT ANTI join of the scan
 against the (tiny, broadcast) completed-partition set — partition
@@ -18,14 +15,23 @@ scope column, so completed partitions are never even read.
 
 from __future__ import annotations
 
-import os
 import uuid
 from dataclasses import dataclass, field
 from functools import reduce
-from typing import List, Optional, Protocol
+from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .ledger import (  # noqa: F401 — the seam's historical import path
+    HadoopFS,
+    LocalFS,
+    SnapshotFS,
+    _compact_posix,
+    append,
+    next_seq,
+    read_pinned,
+)
 
 MANIFEST_SCHEMA = (
     "partition string, run_id string, seq long, n_rows long, n_failed long, "
@@ -33,72 +39,17 @@ MANIFEST_SCHEMA = (
 )
 
 
-class SnapshotFS(Protocol):
-    """Filesystem seam for the manifest/ledger: the ONLY operation the
-    resume machinery needs is a point-in-time LIST of data files under
-    a directory.  POSIX gets os.listdir; an object store / Hadoop FS
-    implementation lists via the Hadoop FileSystem API (or reads an
-    Iceberg snapshot's file list) — appends that land after the call
-    are invisible to plans pinned on the returned list, which is the
-    property resume correctness rests on."""
-
-    def list_files(self, path: str, suffix: str = ".parquet") -> List[str]: ...
-
-
-class LocalFS:
-    """POSIX listing (the in-sandbox default)."""
-
-    def list_files(self, path: str, suffix: str = ".parquet") -> List[str]:
-        if not os.path.exists(path):
-            return []
-        return sorted(
-            f"{path}/{f}" for f in os.listdir(path) if f.endswith(suffix)
-        )
-
-
-class HadoopFS:
-    """Hadoop FileSystem listing through the running JVM — works for
-    hdfs://, s3a://, gs:// etc. with no extra Python deps (the
-    SparkContext already holds the configured Hadoop conf)."""
-
-    def __init__(self, spark: SparkSession):
-        self._jvm = spark.sparkContext._jvm
-        self._conf = spark.sparkContext._jsc.hadoopConfiguration()
-
-    def list_files(self, path: str, suffix: str = ".parquet") -> List[str]:
-        Path = self._jvm.org.apache.hadoop.fs.Path
-        p = Path(path)
-        fs = p.getFileSystem(self._conf)
-        if not fs.exists(p):
-            return []
-        out = []
-        for st in fs.listStatus(p):
-            name = st.getPath().toString()
-            if name.endswith(suffix):
-                out.append(name)
-        return sorted(out)
-
-
 @dataclass
 class PartitionManifest:
     path: str
     fs: SnapshotFS = field(default_factory=LocalFS)
 
-    def _files(self) -> list:
-        return self.fs.list_files(self.path)
-
     def read(self, spark: SparkSession) -> DataFrame:
-        """Full lineage: every recorded (partition, run) attempt.
-
-        The read pins the EXPLICIT file list (like KeyLedger.dim): a
-        directory-path parquet relation re-lists on re-execution, so a
-        plan built before ``record`` appends could otherwise see the
-        append's own files on recomputation (filter_pending → metrics →
-        record reads this very directory in its lineage)."""
-        files = self._files()
-        if not files:
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(*files)
+        """Full lineage: every recorded (partition, run) attempt, read
+        from the pinned file list (filter_pending → metrics → record
+        reads this very directory in its lineage)."""
+        m = read_pinned(spark, self.fs, self.path, MANIFEST_SCHEMA)
+        return m if m is not None else spark.createDataFrame([], MANIFEST_SCHEMA)
 
     def completed(self, spark: SparkSession) -> DataFrame:
         """Latest-wins set of partitions whose latest record is 'ok'."""
@@ -131,19 +82,21 @@ class PartitionManifest:
         run).  metrics: (partition, n_rows, n_failed, n_violations).
         Returns the run_id."""
         rid = run_id or uuid.uuid4().hex[:12]
-        spark = metrics.sparkSession
-        prev = self.read(spark)
-        seq = prev.agg(F.coalesce(F.max("seq"), F.lit(0)).alias("m")).first().m + 1
-        out = metrics.select(
-            F.col("partition").cast("string"),
-            F.lit(rid).alias("run_id"),
-            F.lit(seq).cast("long").alias("seq"),
-            F.col("n_rows").cast("long"),
-            F.col("n_failed").cast("long"),
-            F.col("n_violations").cast("long"),
-            F.lit(status).alias("status"),
+        seq = next_seq(
+            metrics.sparkSession, self.fs, self.path, "seq", MANIFEST_SCHEMA
         )
-        out.write.mode("append").parquet(self.path)
+        append(
+            metrics.select(
+                F.col("partition").cast("string"),
+                F.lit(rid).alias("run_id"),
+                F.lit(seq).cast("long").alias("seq"),
+                F.col("n_rows").cast("long"),
+                F.col("n_failed").cast("long"),
+                F.col("n_violations").cast("long"),
+                F.lit(status).alias("status"),
+            ),
+            self.path,
+        )
         return rid
 
 
@@ -155,10 +108,9 @@ class KeyLedger:
     extended across *runs* for resumable validation.
 
     Layout: one parquet dir per (table, key label) holding a single
-    `__key string` column, append-only (compact offline when it grows
-    fragmented).  An increment's rows whose key already exists in the
-    ledger are duplicates of PRIOR increments; the increment's own
-    keys are then appended."""
+    `__key string` column.  An increment's rows whose key already
+    exists in the ledger are duplicates of PRIOR increments; the
+    increment's own keys are then appended."""
 
     root: str
     fs: SnapshotFS = field(default_factory=LocalFS)
@@ -168,24 +120,15 @@ class KeyLedger:
         return f"{self.root}/{table}/{safe}"
 
     def dim(self, spark: SparkSession, table: str, label: str):
-        p = self._path(table, label)
-        # pin the EXPLICIT file list (via the SnapshotFS seam — POSIX
-        # here, Hadoop FS / Iceberg snapshot on a cluster): parquet
-        # relations re-list their directory on re-execution, so a
-        # directory-path read could see files appended after this dim
-        # was taken (the increment would collide with itself on any
-        # plan recomputation)
-        files = self.fs.list_files(p)
-        if not files:
-            return None
-        return spark.read.schema("__key string").parquet(*files).distinct()
+        keys = read_pinned(
+            spark, self.fs, self._path(table, label), "__key string"
+        )
+        return keys.distinct() if keys is not None else None
 
     def record(self, keys_df: DataFrame, table: str, label: str) -> None:
         """Append this increment's distinct keys (caller must have
         already materialized any violations that read the ledger)."""
-        keys_df.select("__key").distinct().write.mode("append").parquet(
-            self._path(table, label)
-        )
+        append(keys_df.select("__key").distinct(), self._path(table, label))
 
     def compact(self, spark: SparkSession, table: str, label: str) -> int:
         """OFFLINE compaction of one (table, label) key dir: after
@@ -203,40 +146,17 @@ class KeyLedger:
         append racing the fragment removal could be retired before
         any dim snapshot saw it.  On a real deployment this whole
         method is one Iceberg rewrite-files snapshot commit (the
-        SnapshotFS seam) — the POSIX path below is the sandbox
-        stand-in and refuses non-local filesystems."""
+        SnapshotFS seam) — the POSIX path is the local stand-in and
+        refuses non-local filesystems."""
         if not isinstance(self.fs, LocalFS):
             raise NotImplementedError(
                 "compact() is the POSIX stand-in for an Iceberg "
                 "rewrite-files commit — wire your table format's "
                 "compaction instead of the local-rename path."
             )
-        import shutil
-        import uuid as uuid_mod
-
-        p = self._path(table, label)
-        files = self.fs.list_files(p)
-        if len(files) <= 1:
-            return 0
-        tmp = f"{p}/__compact_tmp"  # subdir: invisible to list_files
-        (
-            spark.read.schema("__key string").parquet(*files)
-            .distinct()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
+        return _compact_posix(
+            spark, self.fs, self._path(table, label), "__key string"
         )
-        part = next(
-            f for f in os.listdir(tmp) if f.endswith(".parquet")
-        )
-        os.rename(
-            f"{tmp}/{part}",
-            f"{p}/compacted-{uuid_mod.uuid4().hex}.parquet",
-        )
-        for f in files:
-            os.remove(f)
-        shutil.rmtree(tmp, ignore_errors=True)
-        return len(files)
 
 
 def cross_increment_dup_violations(
@@ -415,17 +335,22 @@ def run_resumable(
     persists FRAME signatures and votes per video pair on probe, and
     embeddings bucket through seeded-plane LSH with exact cosine
     verification (reason ``near_duplicate`` for all three — every
-    modality's cross-increment family).  All ledger
-    appends land AFTER the manifest commit — same crash ordering as
-    the key ledger (a crash loses this increment's sketches: bounded
-    false negatives, never self-collision false positives)."""
+    modality's cross-increment family).  Every ledger append
+    lands AFTER the manifest commit — the crash ordering of
+    ``ledger.py``."""
+    from .checks import uniqueness
     from .payload.validate import image_table_spec, validate_images
+    from .pipeline import incremental_neardup as nd
 
     pending = manifest.filter_pending(images, scope_col)
     # violation frames collect here and union+persist ONCE at the end:
     # chaining .persist() per union layer would cache the same rows in
     # a separate InMemoryRelation per ledger family (review finding)
     parts = [validate_images(pending, formats)]
+    # (ledger, signature frame) pairs: each frame is ONE persisted
+    # decode pass shared by the verdicts here and the post-commit
+    # append below
+    sig_frames = []
     spec = image_table_spec()
     if key_ledger is not None:
         parts.append(
@@ -434,129 +359,56 @@ def run_resumable(
             )
         )
     if neardup_ledger is not None:
-        from .pipeline.incremental_neardup import (
-            cross_increment_near_duplicates,
-        )
-
-        nd = cross_increment_near_duplicates(
-            pending, row_id, neardup_ledger, text_col=caption_col,
-            update=False,
-        ).select(
-            F.lit(f"neardup:{caption_col}").alias("constraint_id"),
-            F.lit("near_duplicate").alias("reason"),
-            F.col("doc_new").alias("row_id"),
-            F.concat(
-                F.col("doc_prior"), F.lit(" @ "),
-                F.round("est_jaccard", 3).cast("string"),
-            ).alias("observed_value"),
-            F.lit("/" + caption_col).alias("path"),
-        )
-        parts.append(nd)
-    phash_sig_frame = None
+        parts.append(_near_dup_rows(
+            nd.cross_increment_near_duplicates(
+                pending, row_id, neardup_ledger, text_col=caption_col,
+                update=False,
+            ),
+            f"neardup:{caption_col}", F.round("est_jaccard", 3), caption_col,
+        ))
     if phash_ledger is not None:
-        from .pipeline.incremental_neardup import (
-            cross_increment_phash_duplicates,
-            phash_sigs,
-        )
-
-        # one decode+DCT pass, persisted: the verdict joins (here) and
-        # the post-commit ledger append (below) share it — same
-        # discipline as the HLL sketch frame
-        phash_sig_frame = phash_sigs(
-            pending, row_id, bytes_col=bytes_col
-        ).persist()
-        pv = cross_increment_phash_duplicates(
-            pending, row_id, phash_ledger, bytes_col=bytes_col,
-            update=False, sig=phash_sig_frame,
-        ).select(
-            F.lit("neardup:phash").alias("constraint_id"),
-            F.lit("near_duplicate").alias("reason"),
-            F.col("doc_new").alias("row_id"),
-            F.concat(
-                F.col("doc_prior"), F.lit(" @ "),
-                F.col("hamming").cast("string"),
-            ).alias("observed_value"),
-            F.lit("/" + bytes_col).alias("path"),
-        )
-        parts.append(pv)
-    audio_sig_frame = None
+        sig = nd.phash_sigs(pending, row_id, bytes_col=bytes_col).persist()
+        sig_frames.append((phash_ledger, sig))
+        parts.append(_near_dup_rows(
+            nd.cross_increment_phash_duplicates(
+                pending, row_id, phash_ledger, update=False, sig=sig,
+            ),
+            "neardup:phash", F.col("hamming"), bytes_col,
+        ))
     if audio_ledger is not None:
-        from .pipeline.incremental_neardup import (
-            audio_sigs,
-            cross_increment_audio_duplicates,
-        )
-
-        # one decode+FFT pass, persisted — verdicts here, append below
-        audio_sig_frame = audio_sigs(
-            pending, row_id, audio_col=audio_col
-        ).persist()
-        av = cross_increment_audio_duplicates(
-            pending, row_id, audio_ledger, update=False,
-            sig=audio_sig_frame,
-        ).select(
-            F.lit("neardup:audio").alias("constraint_id"),
-            F.lit("near_duplicate").alias("reason"),
-            F.col("doc_new").alias("row_id"),
-            F.concat(
-                F.col("doc_prior"), F.lit(" @ "),
-                F.col("hamming").cast("string"),
-            ).alias("observed_value"),
-            F.lit("/" + audio_col).alias("path"),
-        )
-        parts.append(av)
-    video_sig_frame = None
+        sig = nd.audio_sigs(pending, row_id, audio_col=audio_col).persist()
+        sig_frames.append((audio_ledger, sig))
+        parts.append(_near_dup_rows(
+            nd.cross_increment_audio_duplicates(
+                pending, row_id, audio_ledger, update=False, sig=sig,
+            ),
+            "neardup:audio", F.col("hamming"), audio_col,
+        ))
     if video_ledger is not None:
-        from .pipeline.incremental_neardup import (
-            cross_increment_video_duplicates,
-            frame_sigs,
-        )
-
-        # one frame-decode+DCT pass, persisted — verdicts + append
-        video_sig_frame = frame_sigs(
+        sig = nd.frame_sigs(
             pending, row_id, video_col=video_col,
             every_k=video_ledger.every_k,
         ).persist()
-        vv = cross_increment_video_duplicates(
-            pending, row_id, video_ledger,
-            min_shared_frames=video_min_shared_frames,
-            update=False, sig=video_sig_frame,
-        ).select(
-            F.lit("neardup:video").alias("constraint_id"),
-            F.lit("near_duplicate").alias("reason"),
-            F.col("video_new").alias("row_id"),
-            F.concat(
-                F.col("video_prior"), F.lit(" @ "),
-                F.col("shared_frames").cast("string"),
-            ).alias("observed_value"),
-            F.lit("/" + video_col).alias("path"),
-        )
-        parts.append(vv)
-    emb_sig_frame = None
+        sig_frames.append((video_ledger, sig))
+        parts.append(_near_dup_rows(
+            nd.cross_increment_video_duplicates(
+                pending, row_id, video_ledger,
+                min_shared_frames=video_min_shared_frames,
+                update=False, sig=sig,
+            ),
+            "neardup:video", F.col("shared_frames"), video_col,
+            new="video_new", prior="video_prior",
+        ))
     if embedding_ledger is not None:
-        from .pipeline.incremental_neardup import (
-            cross_increment_embedding_duplicates,
-            embedding_sigs,
-        )
-
-        # one vector-normalization pass, persisted — verdicts + append
-        emb_sig_frame = embedding_sigs(
-            pending, row_id, vec_col=embedding_col
-        ).persist()
-        ev = cross_increment_embedding_duplicates(
-            pending, row_id, embedding_ledger,
-            threshold=embedding_threshold, update=False,
-            sig=emb_sig_frame,
-        ).select(
-            F.lit("neardup:embedding").alias("constraint_id"),
-            F.lit("near_duplicate").alias("reason"),
-            F.col("doc_new").alias("row_id"),
-            F.concat(
-                F.col("doc_prior"), F.lit(" @ "),
-                F.round("cos", 3).cast("string"),
-            ).alias("observed_value"),
-            F.lit("/" + embedding_col).alias("path"),
-        )
-        parts.append(ev)
+        sig = nd.embedding_sigs(pending, row_id, vec_col=embedding_col).persist()
+        sig_frames.append((embedding_ledger, sig))
+        parts.append(_near_dup_rows(
+            nd.cross_increment_embedding_duplicates(
+                pending, row_id, embedding_ledger,
+                threshold=embedding_threshold, update=False, sig=sig,
+            ),
+            "neardup:embedding", F.round("cos", 3), embedding_col,
+        ))
     if drift_ledger is not None:
         from .pipeline.drift_ledger import cross_increment_drift
 
@@ -596,41 +448,22 @@ def run_resumable(
     # and are tiny relative to the input — persist the final union
     violations = reduce(lambda a, b: a.unionByName(b), parts).persist()
     metrics = partition_metrics(pending, violations, row_id, scope_col)
-    # ORDER MATTERS for crash recovery: mark partitions complete
-    # BEFORE appending their keys to the ledger.  A crash between the
-    # two loses this increment's ledger keys (future increments miss
-    # cross-increment dups against it — a bounded false NEGATIVE);
-    # the reverse order would make the re-run of a not-yet-complete
-    # partition collide with its own keys — mass false POSITIVES.
-    # The Iceberg seam makes both appends one transaction in
-    # production.
+    # ORDER MATTERS for crash recovery (ledger.py): mark partitions
+    # complete BEFORE appending their keys and sketches to the ledgers
     rid = manifest.record(metrics, run_id=run_id)
     if key_ledger is not None:
-        from .checks import uniqueness
-
         for ks in [*spec.unique, *spec.primary_keys]:
             key_ledger.record(
                 uniqueness.keyed(pending, spec, ks), spec.name, ks.label
             )
     if neardup_ledger is not None:
-        from .pipeline.incremental_neardup import record_sketches
-
-        record_sketches(
+        nd.record_sketches(
             pending, row_id, neardup_ledger, text_col=caption_col
         )
-    if phash_ledger is not None:
+    for led, sig in sig_frames:
         # append the SAME persisted signature frame the verdicts used
-        phash_ledger.record(phash_sig_frame)
-        phash_sig_frame.unpersist()
-    if audio_ledger is not None:
-        audio_ledger.record(audio_sig_frame)
-        audio_sig_frame.unpersist()
-    if video_ledger is not None:
-        video_ledger.record(video_sig_frame)
-        video_sig_frame.unpersist()
-    if embedding_ledger is not None:
-        embedding_ledger.record(emb_sig_frame)
-        emb_sig_frame.unpersist()
+        led.record(sig)
+        sig.unpersist()
     if drift_ledger is not None:
         from .pipeline.drift_ledger import record_snapshot
 
@@ -646,3 +479,20 @@ def run_resumable(
         )
         hll_sketch_frame.unpersist()
     return violations, metrics, rid
+
+
+def _near_dup_rows(
+    pairs: DataFrame, constraint_id: str, score: Column, col: str,
+    new: str = "doc_new", prior: str = "doc_prior",
+) -> DataFrame:
+    """A ledger probe's (new, prior, score) pairs as violation rows:
+    observed value ``"<prior> @ <score>"``, path ``/<col>``."""
+    return pairs.select(
+        F.lit(constraint_id).alias("constraint_id"),
+        F.lit("near_duplicate").alias("reason"),
+        F.col(new).alias("row_id"),
+        F.concat(
+            F.col(prior), F.lit(" @ "), score.cast("string")
+        ).alias("observed_value"),
+        F.lit("/" + col).alias("path"),
+    )

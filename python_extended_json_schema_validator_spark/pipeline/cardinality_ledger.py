@@ -41,22 +41,22 @@ partial-merge shuffle of ~KB sketches (map-side combine does the
 heavy lifting), the ledger read is O(groups x increments) tiny rows
 that broadcast, and nothing ever re-reads prior data.
 
-Same SnapshotFS/parquet seam and crash ordering as the other three
-ledgers (Key / MinHash / Quantile): verdicts materialize BEFORE the
-increment's own sketch is appended, so a crash loses one increment's
-sketches (bounded novelty over-estimate next run) and can never make
-an increment collide with itself.
+Storage and crash ordering follow ``ledger.py``: a crash loses one
+increment's sketches (a bounded novelty over-estimate next run) and
+never makes an increment collide with itself.  The ledger is never
+compacted — ``cumulative`` sums ``__n_rows``, so a crash mid-rewrite
+would double-count the duplicated rows.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..manifest import LocalFS, SnapshotFS
+from ..ledger import SnapshotLedger
 
 #: Spark's hll_sketch_agg default; kept explicit so ledger writers and
 #: readers can never drift apart (hll_union with different lgConfigK
@@ -66,25 +66,11 @@ LG_CONFIG_K = 12
 
 
 @dataclass
-class HllLedger:
-    """Append-only per-(table, column) cardinality snapshots:
-    (``__seq`` long, group cols…, ``__hll`` binary, ``__n_rows`` long),
-    parquet behind the SnapshotFS seam with pinned-file-list reads."""
+class HllLedger(SnapshotLedger):
+    """Per-(table, column) cardinality snapshots: (``__seq`` long,
+    group cols…, ``__hll`` binary, ``__n_rows`` long)."""
 
-    root: str
-    fs: SnapshotFS = field(default_factory=LocalFS)
     lg_config_k: int = LG_CONFIG_K
-
-    def _path(self, table: str, column: str) -> str:
-        return f"{self.root}/{table}/{column}"
-
-    def _read(
-        self, spark: SparkSession, table: str, column: str
-    ) -> Optional[DataFrame]:
-        files = self.fs.list_files(self._path(table, column))
-        if not files:
-            return None
-        return spark.read.parquet(*files)
 
     def sketch(
         self, df: DataFrame, column: str, group_by: Sequence[str] = ()
@@ -114,31 +100,14 @@ class HllLedger:
             F.sum("__n_rows").alias("__n_rows"),
         )
 
-    def next_seq(self, spark: SparkSession, table: str, column: str) -> int:
-        snap = self._read(spark, table, column)
-        if snap is None:
-            return 1
-        # coalesce: a directory holding only zero-row part files (an
-        # empty increment was recorded) yields max(__seq) = NULL —
-        # without the default, None + 1 would poison the ledger for
-        # every later append (same guard as manifest.record's seq)
-        return (
-            snap.agg(F.coalesce(F.max("__seq"), F.lit(0)).alias("m"))
-            .first()
-            .m
-            + 1
-        )
-
     def record(
         self, sketches: DataFrame, table: str, column: str, seq: int
     ) -> None:
         """Append one increment's (group…, __hll, __n_rows) rows under
-        ``__seq``.  Production swap point: ``.writeTo(...).append()``
-        on an Iceberg table makes this atomic with the manifest
-        commit (see manifest.run_resumable's ordering comment)."""
-        sketches.where(F.col("__hll").isNotNull()).select(
-            F.lit(seq).cast("long").alias("__seq"), "*"
-        ).write.mode("append").parquet(self._path(table, column))
+        ``__seq``; NULL sketches (all-NULL groups) are dropped."""
+        super().record(
+            sketches.where(F.col("__hll").isNotNull()), table, column, seq
+        )
 
 
 def cross_increment_cardinality(

@@ -34,9 +34,10 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..manifest import KeyLedger, LocalFS, SnapshotFS
+from ..ledger import LocalFS, SnapshotFS, append, read_pinned
+from ..manifest import KeyLedger
 from . import dedup
-from .incremental_neardup import MinHashLedger
+from .incremental_neardup import MinHashLedger, minhash_sigs
 from .text import token_count
 
 
@@ -44,30 +45,26 @@ from .text import token_count
 class QuotaLedger:
     """Persistent per-language kept counts: ``<root>`` holds
     append-only (lang string, kept long) parquet; the running sum per
-    language is the quota already consumed by prior increments.
-    Pinned-file-list reads via the SnapshotFS seam, like every other
-    ledger."""
+    language is the quota already consumed by prior increments."""
 
     root: str
     fs: SnapshotFS = field(default_factory=LocalFS)
 
     def kept_counts(self, spark: SparkSession) -> Optional[DataFrame]:
-        files = self.fs.list_files(self.root)
-        if not files:
+        kept = read_pinned(spark, self.fs, self.root, "lang string, kept long")
+        if kept is None:
             return None
-        return (
-            spark.read.schema("lang string, kept long")
-            .parquet(*files)
-            .groupBy("lang")
-            .agg(F.sum("kept").alias("kept"))
-        )
+        return kept.groupBy("lang").agg(F.sum("kept").alias("kept"))
 
     def record(self, counts: DataFrame) -> None:
         """Append this increment's per-language kept counts
         ((lang, kept) rows)."""
-        counts.select(
-            F.col("lang").cast("string"), F.col("kept").cast("long")
-        ).coalesce(1).write.mode("append").parquet(self.root)
+        append(
+            counts.select(
+                F.col("lang").cast("string"), F.col("kept").cast("long")
+            ).coalesce(1),
+            self.root,
+        )
 
 
 def curate_increment(
@@ -156,10 +153,7 @@ def curate_increment(
     q2 = q1.join(exact_dropped, "doc", "left_anti")
 
     # ---- near-dup: ONE signature pass for within + history + append
-    sh = dedup.word_shingles(q2, "doc", "__text", k)
-    sig = dedup.minhash_signatures(sh, H).select(
-        F.col("doc").cast("string"), *[f"h{i}" for i in range(H)]
-    ).persist()
+    sig = minhash_sigs(q2, "doc", "__text", k, H).persist()
     bb = dedup.band_buckets(sig, H, bands)
     est = (
         sum(

@@ -15,44 +15,26 @@ the whole check remains bit-replicable in SQL (quantile_cont ⇔
 percentile) and the driver hash-checks it end-to-end
 (__spark_entry__.q_drift_ledger).  At 10^12 rows pass
 ``approx=True``-style sketches by recording tdigest.quantile_sketch
-outputs instead — the ledger schema doesn't change.
-
-Same SnapshotFS/parquet seam and crash ordering as the other
-ledgers: the drift verdicts materialize BEFORE the increment's own
-snapshot is appended.
+outputs instead — the ledger schema doesn't change.  Storage and
+crash ordering follow ``ledger.py``.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import stats
-from ..manifest import LocalFS, SnapshotFS
+from ..ledger import SnapshotLedger
 
 
 @dataclass
-class QuantileLedger:
-    """Append-only per-(table, column) quantile snapshots:
-    (``__seq`` long, group cols…, p10..p90 double), parquet behind
-    the SnapshotFS seam with pinned-file-list reads."""
-
-    root: str
-    fs: SnapshotFS = field(default_factory=LocalFS)
-
-    def _path(self, table: str, column: str) -> str:
-        return f"{self.root}/{table}/{column}"
-
-    def _read(
-        self, spark: SparkSession, table: str, column: str
-    ) -> Optional[DataFrame]:
-        files = self.fs.list_files(self._path(table, column))
-        if not files:
-            return None
-        return spark.read.parquet(*files)
+class QuantileLedger(SnapshotLedger):
+    """Per-(table, column) quantile snapshots: (``__seq`` long, group
+    cols…, p10..p90 double)."""
 
     def baseline(
         self,
@@ -74,27 +56,6 @@ class QuantileLedger:
             snap.join(F.broadcast(pick), snap["__seq"] == pick["s"])
             .drop("__seq", "s")
         )
-
-    def next_seq(self, spark: SparkSession, table: str, column: str) -> int:
-        snap = self._read(spark, table, column)
-        if snap is None:
-            return 1
-        # coalesce: a directory holding only zero-row part files (an
-        # empty increment's snapshot) yields max(__seq) = NULL — the
-        # default keeps the ledger appendable (manifest.record's guard)
-        return (
-            snap.agg(F.coalesce(F.max("__seq"), F.lit(0)).alias("m"))
-            .first()
-            .m
-            + 1
-        )
-
-    def record(
-        self, quantiles: DataFrame, table: str, column: str, seq: int
-    ) -> None:
-        quantiles.select(
-            F.lit(seq).cast("long").alias("__seq"), "*"
-        ).write.mode("append").parquet(self._path(table, column))
 
 
 def cross_increment_drift(

@@ -20,148 +20,146 @@ Design (the at-scale sketch discipline):
   sets are gone by design; in-corpus pairs keep exact verification
   (dedup.jaccard_on_pairs).
 
-Same crash-ordering contract as the exact ledger: candidates are
-materialized BEFORE the increment's own sketches are appended, so an
-increment never collides with itself on plan recomputation.
-
-Sandbox note: parquet-dir ledgers behind the SnapshotFS seam, exactly
-like manifest.KeyLedger — swap for Iceberg appends in production.
+Storage, SnapshotFS seam, crash ordering and parameter pinning are
+the ``ledger.py`` contract shared by every family; ``_probe_history``
+is the one banded probe all three sketch families run.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional
+from functools import reduce
+from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..manifest import LocalFS, SnapshotFS
+from ..ledger import LocalFS, SnapshotFS, append, pin_params, read_pinned
 from . import dedup
 
-_META_TYPES = {"seed": "int", "dim": "int", "bits": "int",
-               "tables": "int", "num_hashes": "int", "bands": "int",
-               "max_hamming": "int", "every_k": "int"}
 
+def _probe_history(
+    ledger,
+    sig: DataFrame,
+    cache_sig: bool,
+    update: bool,
+    keys_dim: Callable[[SparkSession], Optional[DataFrame]],
+    sigs_dim: Callable[[SparkSession], DataFrame],
+    bucket: Callable[[DataFrame], DataFrame],
+    keys: Sequence[str],
+    score: Column,
+    keep: Column,
+    empty: str,
+) -> DataFrame:
+    """(doc_new, doc_prior, <score>) for this increment's signatures
+    ``sig`` (doc, …) against a PRIOR increment's: ``bucket(sig)``'s
+    ``keys`` equi-joined to the ledger's ``keys_dim`` (bucketed, never
+    all-pairs) → distinct candidate pairs → both sides' stored
+    signatures fetched by doc → ``score`` (over the ``n.``/``p.``
+    signature columns) → ``keep``.  ``empty`` is the result schema
+    when the ledger holds no history yet.
 
-def _meta_schema(fields) -> str:
-    return ", ".join(f"{f} {_META_TYPES[f]}" for f in fields)
-
-
-def _validated_meta(ledger, spark: SparkSession, fields,
-                    data_sub: str, meta_sub: str = "meta") -> bool:
-    """Shared parameter-pinning guard for every ledger family
-    (review findings, round 7): returns True iff a meta file exists
-    and matches the instance's parameters (cached on the instance —
-    the fields are immutable, so one driver read per ledger object
-    suffices); returns False iff the ledger is genuinely EMPTY (no
-    meta AND no data — first use); raises on a parameter mismatch OR
-    on a data-bearing root with no meta (a pre-pinning root must not
-    be silently re-certified with whatever parameters the caller
-    happens to pass — write the meta explicitly after verifying the
-    original parameters, or use a new root)."""
-    cache_attr = f"_meta_ok_{meta_sub}"
-    if getattr(ledger, cache_attr, False):
-        return True
-    meta = ledger._read(spark, meta_sub, _meta_schema(fields))
-    row = meta.first() if meta is not None else None
-    if row is None:
-        if ledger.fs.list_files(f"{ledger.root}/{data_sub}"):
-            raise ValueError(
-                f"{type(ledger).__name__} at {ledger.root!r} has "
-                f"recorded data but no {meta_sub!r} parameter file "
-                "(pre-pinning root): probing it with unverified "
-                "parameters would silently miss-join. Verify the "
-                "original parameters and write the meta file, or "
-                "use a new root."
-            )
-        return False
-    mine = tuple(getattr(ledger, f) for f in fields)
-    theirs = tuple(getattr(row, f) for f in fields)
-    if mine != theirs:
-        named = ", ".join(fields)
-        raise ValueError(
-            f"{type(ledger).__name__} at {ledger.root!r} was created "
-            f"with ({named})={theirs}; reopened with {mine} — "
-            "sketches would silently miss-join. Use the original "
-            "parameters or a new root."
+    With ``update`` the pairs are persisted and materialized BEFORE
+    ``ledger.record(sig)`` appends (a recompute after the append would
+    self-collide) and the cache then belongs to the CALLER — unpersist
+    the returned frame once consumed.  Probe-only calls return an
+    unpersisted frame: recompute against the unchanged ledger is
+    safe, and batch drivers (run_resumable) fold it into their own
+    persisted union.  ``cache_sig`` persists ``sig`` across the
+    verdict jobs and the append (exchange reuse never spans jobs)."""
+    spark = sig.sparkSession
+    if cache_sig and update:
+        sig = sig.persist()
+    prior_keys = keys_dim(spark)
+    if prior_keys is None:
+        out = spark.createDataFrame([], empty)
+    else:
+        on = reduce(
+            lambda a, b: a & b,
+            [F.col(f"n.{k}") == F.col(f"p.{k}") for k in keys],
         )
-    setattr(ledger, cache_attr, True)
-    return True
-
-
-def _write_meta(ledger, spark: SparkSession, fields,
-                meta_sub: str = "meta") -> None:
-    spark.createDataFrame(
-        [tuple(getattr(ledger, f) for f in fields)],
-        _meta_schema(fields),
-    ).coalesce(1).write.mode("append").parquet(
-        f"{ledger.root}/{meta_sub}"
-    )
-    setattr(ledger, f"_meta_ok_{meta_sub}", True)
+        cands = (
+            bucket(sig).alias("n")
+            .join(prior_keys.alias("p"), on)
+            .select(
+                F.col("n.doc").alias("doc_new"),
+                F.col("p.doc").alias("doc_prior"),
+            )
+            .distinct()
+        )
+        out = (
+            cands.join(sig.alias("n"), cands["doc_new"] == F.col("n.doc"))
+            .join(
+                sigs_dim(spark).alias("p"),
+                cands["doc_prior"] == F.col("p.doc"),
+            )
+            .select("doc_new", "doc_prior", score)
+            .where(keep)
+        )
+        if update:
+            out = out.persist()
+            out.count()
+    if update:
+        ledger.record(sig)
+        if cache_sig:
+            sig.unpersist()
+    return out
 
 
 @dataclass
 class MinHashLedger:
     """Persistent MinHash sketches: ``<root>/sigs`` (doc string,
     h0..h{H-1} string) and ``<root>/bands`` (doc, band int, bucket
-    string), append-only parquet with pinned-file-list reads (the
-    SnapshotFS seam — appends after a dim is taken stay invisible to
-    that dim's plan).
+    string).
 
     ``num_hashes`` and ``bands`` are LEDGER properties, not probe
     parameters (same rationale as PhashLedger.max_hamming): recorded
     band buckets must partition the signature the same way every
     future increment probes with, or recall silently drops and
-    est_jaccard corrupts.  Both are persisted to ``<root>/meta`` (a
-    one-row parquet — the SnapshotFS seam is list-only, so meta rides
-    the same parquet transport as the sketches) on first record and
-    validated on every subsequent open/record: a ledger reopened with
-    different parameters fails LOUDLY instead of miss-joining."""
+    est_jaccard corrupts.  Both are pinned in ``<root>/meta``
+    (``ledger.pin_params``)."""
 
     root: str
     num_hashes: int = 8
     bands: int = 4
     fs: SnapshotFS = field(default_factory=LocalFS)
 
-    def _read(self, spark: SparkSession, sub: str, schema: str):
-        files = self.fs.list_files(f"{self.root}/{sub}")
-        if not files:
-            return None
-        return spark.read.schema(schema).parquet(*files)
-
-    def _check_meta(self, spark: SparkSession) -> bool:
-        return _validated_meta(
-            self, spark, ("num_hashes", "bands"), "sigs"
+    def _pin(self, spark: SparkSession, create: bool = False) -> bool:
+        return pin_params(
+            self, spark, ("num_hashes", "bands"), "sigs", create=create
         )
 
     def sigs_dim(self, spark: SparkSession) -> Optional[DataFrame]:
-        self._check_meta(spark)
+        self._pin(spark)
         cols = ", ".join(f"h{i} string" for i in range(self.num_hashes))
-        return self._read(spark, "sigs", f"doc string, {cols}")
+        return read_pinned(
+            spark, self.fs, f"{self.root}/sigs", f"doc string, {cols}"
+        )
 
     def bands_dim(self, spark: SparkSession) -> Optional[DataFrame]:
-        self._check_meta(spark)
-        return self._read(
-            spark, "bands", "doc string, band int, bucket string"
+        self._pin(spark)
+        return read_pinned(
+            spark, self.fs, f"{self.root}/bands",
+            "doc string, band int, bucket string",
         )
 
     def record(self, signatures: DataFrame) -> None:
         """Append an increment's sketches (caller must have
         materialized any candidates that read the ledger first)."""
-        spark = signatures.sparkSession
-        if not self._check_meta(spark):
-            _write_meta(self, spark, ("num_hashes", "bands"))
+        self._pin(signatures.sparkSession, create=True)
         sig = signatures.select(
             F.col("doc").cast("string"),
             *[F.col(f"h{i}") for i in range(self.num_hashes)],
         )
-        sig.write.mode("append").parquet(f"{self.root}/sigs")
-        dedup.band_buckets(sig, self.num_hashes, self.bands).select(
-            F.col("doc").cast("string"),
-            F.col("band").cast("int"),
-            "bucket",
-        ).write.mode("append").parquet(f"{self.root}/bands")
+        append(sig, f"{self.root}/sigs")
+        append(
+            dedup.band_buckets(sig, self.num_hashes, self.bands).select(
+                F.col("doc").cast("string"),
+                F.col("band").cast("int"),
+                "bucket",
+            ),
+            f"{self.root}/bands",
+        )
 
 
 def cross_increment_near_duplicates(
@@ -192,68 +190,21 @@ def cross_increment_near_duplicates(
     — probing with different banding than history was recorded with
     silently loses recall)."""
     bands = _resolve_bands(ledger, bands)
-    spark = df.sparkSession
     H = ledger.num_hashes
-    sh = dedup.word_shingles(df, id_col, text_col, k)
-    sig = dedup.minhash_signatures(sh, H).select(
-        F.col("doc").cast("string"), *[f"h{i}" for i in range(H)]
+    sig = minhash_sigs(df, id_col, text_col, k, H)
+    agree = sum(
+        F.when(F.col(f"n.h{i}") == F.col(f"p.h{i}"), 1).otherwise(0)
+        for i in range(H)
     )
-    prior_bands = ledger.bands_dim(spark)
-    if prior_bands is None:
-        out = spark.createDataFrame(
-            [], "doc_new string, doc_prior string, est_jaccard double"
-        )
-    else:
-        mine = dedup.band_buckets(sig, H, bands)
-        cands = (
-            mine.alias("n")
-            .join(
-                prior_bands.alias("p"),
-                (F.col("n.band") == F.col("p.band"))
-                & (F.col("n.bucket") == F.col("p.bucket")),
-            )
-            .select(
-                F.col("n.doc").alias("doc_new"),
-                F.col("p.doc").alias("doc_prior"),
-            )
-            .distinct()
-        )
-        prior_sigs = ledger.sigs_dim(spark)
-        agree = sum(
-            F.when(
-                F.col(f"n.h{i}") == F.col(f"p.h{i}"), 1
-            ).otherwise(0)
-            for i in range(H)
-        )
-        out = (
-            cands.join(
-                sig.alias("n"), cands["doc_new"] == F.col("n.doc")
-            )
-            .join(
-                prior_sigs.alias("p"),
-                cands["doc_prior"] == F.col("p.doc"),
-            )
-            .select(
-                "doc_new",
-                "doc_prior",
-                (agree / F.lit(float(H))).alias("est_jaccard"),
-            )
-            .where(F.col("est_jaccard") >= min_est_jaccard)
-        )
-        if update:
-            # materialize BEFORE the ledger grows (a recompute after
-            # the append would self-collide); the cache then belongs
-            # to the CALLER — release contract (r08): unpersist the
-            # returned frame once consumed.  Probe-only calls
-            # (update=False) return an UNPERSISTED frame: recompute
-            # against the unchanged ledger is safe, and batch drivers
-            # (run_resumable) fold it into their own persisted union —
-            # previously these frames stayed cached for session life.
-            out = out.persist()
-            out.count()
-    if update:
-        ledger.record(sig)
-    return out
+    return _probe_history(
+        ledger, sig, cache_sig=False, update=update,
+        keys_dim=ledger.bands_dim, sigs_dim=ledger.sigs_dim,
+        bucket=lambda s: dedup.band_buckets(s, H, bands),
+        keys=("band", "bucket"),
+        score=(agree / F.lit(float(H))).alias("est_jaccard"),
+        keep=F.col("est_jaccard") >= min_est_jaccard,
+        empty="doc_new string, doc_prior string, est_jaccard double",
+    )
 
 
 def _resolve_bands(ledger: MinHashLedger, bands: Optional[int]) -> int:
@@ -281,12 +232,18 @@ def record_sketches(
     signature aggregation re-runs — persist ``df`` upstream if that
     matters at your scale)."""
     _resolve_bands(ledger, bands)
+    ledger.record(minhash_sigs(df, id_col, text_col, k, ledger.num_hashes))
+
+
+def minhash_sigs(
+    df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int
+) -> DataFrame:
+    """(doc string, h0..h{H-1}) signature frame of ``text_col``'s
+    ``k``-word shingles — the MinHash ledger's ``phash_sigs``."""
     sh = dedup.word_shingles(df, id_col, text_col, k)
-    sig = dedup.minhash_signatures(sh, ledger.num_hashes).select(
-        F.col("doc").cast("string"),
-        *[f"h{i}" for i in range(ledger.num_hashes)],
+    return dedup.minhash_signatures(sh, num_hashes).select(
+        F.col("doc").cast("string"), *[f"h{i}" for i in range(num_hashes)]
     )
-    ledger.record(sig)
 
 
 @dataclass
@@ -296,37 +253,34 @@ class PhashLedger:
     ``<root>/sigs`` (doc string, phash long — the full 64-bit DCT
     signature is 8 bytes, so unlike MinHash the ledger keeps the
     WHOLE sketch) and ``<root>/blocks`` (doc, blk int, bkey string —
-    pigeonhole block keys at ``max_hamming``).  Append-only parquet
-    behind the SnapshotFS seam, same as MinHashLedger.
+    pigeonhole block keys at ``max_hamming``).
 
     ``max_hamming`` is a LEDGER property, not a probe parameter:
     recorded block keys must use the same bounds future increments
-    probe with (dedup.block_bounds), so it is fixed at creation —
-    persisted to ``<root>/meta`` on first record and validated on
-    every open (round-7 review finding: the dataclass default alone
-    could not catch a drifted reopen)."""
+    probe with (dedup.block_bounds), so it is pinned in
+    ``<root>/meta`` (the dataclass default alone could not catch a
+    drifted reopen)."""
 
     root: str
     max_hamming: int = 6
     fs: SnapshotFS = field(default_factory=LocalFS)
 
-    def _read(self, spark: SparkSession, sub: str, schema: str):
-        files = self.fs.list_files(f"{self.root}/{sub}")
-        if not files:
-            return None
-        return spark.read.schema(schema).parquet(*files)
-
-    def _check_meta(self, spark: SparkSession) -> bool:
-        return _validated_meta(self, spark, ("max_hamming",), "sigs")
+    def _pin(self, spark: SparkSession, create: bool = False) -> bool:
+        return pin_params(
+            self, spark, ("max_hamming",), "sigs", create=create
+        )
 
     def sigs_dim(self, spark: SparkSession) -> Optional[DataFrame]:
-        self._check_meta(spark)
-        return self._read(spark, "sigs", "doc string, phash long")
+        self._pin(spark)
+        return read_pinned(
+            spark, self.fs, f"{self.root}/sigs", "doc string, phash long"
+        )
 
     def blocks_dim(self, spark: SparkSession) -> Optional[DataFrame]:
-        self._check_meta(spark)
-        return self._read(
-            spark, "blocks", "doc string, blk int, bkey string"
+        self._pin(spark)
+        return read_pinned(
+            spark, self.fs, f"{self.root}/blocks",
+            "doc string, blk int, bkey string",
         )
 
     def record(self, sig: DataFrame) -> None:
@@ -340,21 +294,23 @@ class PhashLedger:
         decode+DCT lineage (review finding, fixed)."""
         from ..payload import phash as phash_mod
 
-        if not self._check_meta(sig.sparkSession):
-            _write_meta(self, sig.sparkSession, ("max_hamming",))
+        self._pin(sig.sparkSession, create=True)
         frame = sig.select(
             F.col("doc").cast("string"), F.col("phash").cast("long")
         ).persist()
         try:
-            frame.write.mode("append").parquet(f"{self.root}/sigs")
-            phash_mod.phash_blocks(
-                frame, id_col="doc", phash_col="phash",
-                max_hamming=self.max_hamming,
-            ).select(
-                F.col("doc").cast("string"),
-                F.col("blk").cast("int"),
-                "bkey",
-            ).write.mode("append").parquet(f"{self.root}/blocks")
+            append(frame, f"{self.root}/sigs")
+            append(
+                phash_mod.phash_blocks(
+                    frame, id_col="doc", phash_col="phash",
+                    max_hamming=self.max_hamming,
+                ).select(
+                    F.col("doc").cast("string"),
+                    F.col("blk").cast("int"),
+                    "bkey",
+                ),
+                f"{self.root}/blocks",
+            )
         finally:
             frame.unpersist()
 
@@ -396,76 +352,39 @@ def cross_increment_phash_duplicates(
     re-read.  Scale shape: one map-only decode+DCT pass (repartition
     → every branch a ReusedExchange), one bucketed block equi-join
     against history, two hash joins to fetch the 8-byte signatures.
-    Same crash ordering as the other ledger families: candidates
-    materialize BEFORE the append.
 
     Pass a pre-built (and ideally persisted) ``sig`` frame
     (``phash_sigs``) to share the decode pass with other consumers —
     when ``update=True`` and no frame is given, one is persisted here
     so the verdict jobs and the append never decode twice."""
+    own_sig = sig is None
+    return _probe_phash(
+        ledger, phash_sigs(df, id_col, bytes_col) if own_sig else sig,
+        own_sig, update,
+    )
+
+
+def _probe_phash(
+    ledger: PhashLedger, sig: DataFrame, cache_sig: bool, update: bool
+) -> DataFrame:
+    """The phash-family probe (images, audio clips, video frames):
+    block-key candidates, exact long-XOR hamming verify."""
     from ..payload import phash as phash_mod
 
-    spark = df.sparkSession
-    own_sig = sig is None
-    if own_sig:
-        sig = phash_sigs(df, id_col, bytes_col)
-        if update:
-            sig = sig.persist()
-    prior_blocks = ledger.blocks_dim(spark)
-    if prior_blocks is None:
-        out = spark.createDataFrame(
-            [], "doc_new string, doc_prior string, hamming int"
-        )
-    else:
-        mine = phash_mod.phash_blocks(
-            sig, id_col="doc", phash_col="phash",
+    return _probe_history(
+        ledger, sig, cache_sig=cache_sig, update=update,
+        keys_dim=ledger.blocks_dim, sigs_dim=ledger.sigs_dim,
+        bucket=lambda s: phash_mod.phash_blocks(
+            s, id_col="doc", phash_col="phash",
             max_hamming=ledger.max_hamming,
-        )
-        cands = (
-            mine.alias("n")
-            .join(
-                prior_blocks.alias("p"),
-                (F.col("n.blk") == F.col("p.blk"))
-                & (F.col("n.bkey") == F.col("p.bkey")),
-            )
-            .select(
-                F.col("n.doc").alias("doc_new"),
-                F.col("p.doc").alias("doc_prior"),
-            )
-            .distinct()
-        )
-        prior_sigs = ledger.sigs_dim(spark)
-        out = (
-            cands.join(sig.alias("n"), cands["doc_new"] == F.col("n.doc"))
-            .join(
-                prior_sigs.alias("p"),
-                cands["doc_prior"] == F.col("p.doc"),
-            )
-            .select(
-                "doc_new",
-                "doc_prior",
-                F.bit_count(
-                    F.col("n.phash").bitwiseXOR(F.col("p.phash"))
-                ).cast("int").alias("hamming"),
-            )
-            .where(F.col("hamming") <= ledger.max_hamming)
-        )
-        if update:
-            # materialize BEFORE the ledger grows (a recompute after
-            # the append would self-collide); the cache then belongs
-            # to the CALLER — release contract (r08): unpersist the
-            # returned frame once consumed.  Probe-only calls
-            # (update=False) return an UNPERSISTED frame: recompute
-            # against the unchanged ledger is safe, and batch drivers
-            # (run_resumable) fold it into their own persisted union —
-            # previously these frames stayed cached for session life.
-            out = out.persist()
-            out.count()
-    if update:
-        ledger.record(sig)
-        if own_sig:
-            sig.unpersist()
-    return out
+        ),
+        keys=("blk", "bkey"),
+        score=F.bit_count(
+            F.col("n.phash").bitwiseXOR(F.col("p.phash"))
+        ).cast("int").alias("hamming"),
+        keep=F.col("hamming") <= ledger.max_hamming,
+        empty="doc_new string, doc_prior string, hamming int",
+    )
 
 
 def record_phash_sketches(
@@ -531,19 +450,12 @@ def cross_increment_audio_duplicates(
     audio fingerprint sits within ``ledger.max_hamming`` bits of a
     PRIOR increment's — the audio twin of
     ``cross_increment_phash_duplicates`` (exact verification against
-    stored 64-bit signatures, prior samples never re-decoded, same
-    materialize-before-append crash ordering)."""
+    stored 64-bit signatures, prior samples never re-decoded)."""
     own_sig = sig is None
-    if own_sig:
-        sig = audio_sigs(df, id_col, audio_col)
-        if update:
-            sig = sig.persist()
-    out = cross_increment_phash_duplicates(
-        df, id_col, ledger, update=update, sig=sig
+    return _probe_phash(
+        ledger, audio_sigs(df, id_col, audio_col) if own_sig else sig,
+        own_sig, update,
     )
-    if own_sig and update:
-        sig.unpersist()
-    return out
 
 
 @dataclass
@@ -572,15 +484,10 @@ class VideoLedger:
     every_k: int = 1
     fs: SnapshotFS = field(default_factory=LocalFS)
 
-    def _read(self, spark: SparkSession, sub: str, schema: str):
-        files = self.fs.list_files(f"{self.root}/{sub}")
-        if not files:
-            return None
-        return spark.read.schema(schema).parquet(*files)
-
-    def _check_meta(self, spark: SparkSession) -> bool:
-        return _validated_meta(
-            self, spark, ("every_k",), "sigs", meta_sub="vmeta"
+    def _pin(self, spark: SparkSession, create: bool = False) -> bool:
+        return pin_params(
+            self, spark, ("every_k",), "sigs", meta_sub="vmeta",
+            create=create,
         )
 
     def frame_store(self) -> PhashLedger:
@@ -588,9 +495,7 @@ class VideoLedger:
 
     def record(self, sig: DataFrame) -> None:
         """Append a pre-built frame-signature frame (``frame_sigs``)."""
-        if not self._check_meta(sig.sparkSession):
-            _write_meta(self, sig.sparkSession, ("every_k",),
-                        meta_sub="vmeta")
+        self._pin(sig.sparkSession, create=True)
         self.frame_store().record(sig)
 
 
@@ -650,20 +555,17 @@ def cross_increment_video_duplicates(
     # every_k drift fails loudly; the probe-with-update path records
     # through the inner frame store, so the vmeta write happens HERE
     # (VideoLedger.record covers the record-only path)
-    if not ledger._check_meta(df.sparkSession) and update:
-        _write_meta(ledger, df.sparkSession, ("every_k",),
-                    meta_sub="vmeta")
+    ledger._pin(df.sparkSession, create=update)
     own_sig = sig is None
-    if own_sig:
-        sig = frame_sigs(df, id_col, video_col, every_k=ledger.every_k)
-        if update:
-            sig = sig.persist()
-    fpairs = cross_increment_phash_duplicates(
-        df, id_col, ledger.frame_store(), update=update, sig=sig
+    fpairs = _probe_phash(
+        ledger.frame_store(),
+        frame_sigs(df, id_col, video_col, every_k=ledger.every_k)
+        if own_sig else sig,
+        own_sig, update,
     )
     va = F.expr("substring(doc_new, 10)")   # strip the 9-digit prefix
     vb = F.expr("substring(doc_prior, 10)")
-    out = (
+    return (
         fpairs.where(va != vb)
         .select(
             va.alias("video_new"),
@@ -679,9 +581,6 @@ def cross_increment_video_duplicates(
         )
         .where(F.col("shared_frames") >= min_shared_frames)
     )
-    if own_sig and update:
-        sig.unpersist()
-    return out
 
 
 @dataclass
@@ -692,14 +591,12 @@ class EmbeddingLedger:
     fingerprint, video frames, embeddings): ``<root>/vecs`` (doc
     string, vec array<double>) and ``<root>/buckets`` (doc, tbl int,
     bucket string — seeded random-hyperplane LSH keys,
-    similarity.hyperplane_bucket), append-only parquet behind the
-    SnapshotFS seam.
+    similarity.hyperplane_bucket).
 
     ``dim`` / ``bits`` / ``tables`` / ``seed`` are LEDGER properties
     (the MinHashLedger rationale): every increment must bucket with
-    the SAME planes or probes silently miss history.  They persist to
-    ``<root>/meta`` on first record and are validated on every
-    open/record.  ``threshold`` is a PROBE parameter — the exact
+    the SAME planes or probes silently miss history, so they are
+    pinned in ``<root>/meta``.  ``threshold`` is a PROBE parameter — the exact
     cosine verify is computed fresh per probe, so history is
     threshold-agnostic."""
 
@@ -710,15 +607,10 @@ class EmbeddingLedger:
     seed: int = 42
     fs: SnapshotFS = field(default_factory=LocalFS)
 
-    def _read(self, spark: SparkSession, sub: str, schema: str):
-        files = self.fs.list_files(f"{self.root}/{sub}")
-        if not files:
-            return None
-        return spark.read.schema(schema).parquet(*files)
-
-    def _check_meta(self, spark: SparkSession) -> bool:
-        return _validated_meta(
-            self, spark, ("dim", "bits", "tables", "seed"), "vecs"
+    def _pin(self, spark: SparkSession, create: bool = False) -> bool:
+        return pin_params(
+            self, spark, ("dim", "bits", "tables", "seed"), "vecs",
+            create=create,
         )
 
     def planes(self) -> list:
@@ -728,13 +620,17 @@ class EmbeddingLedger:
                                   self.seed)
 
     def vecs_dim(self, spark: SparkSession) -> Optional[DataFrame]:
-        self._check_meta(spark)
-        return self._read(spark, "vecs", "doc string, vec array<double>")
+        self._pin(spark)
+        return read_pinned(
+            spark, self.fs, f"{self.root}/vecs",
+            "doc string, vec array<double>",
+        )
 
     def buckets_dim(self, spark: SparkSession) -> Optional[DataFrame]:
-        self._check_meta(spark)
-        return self._read(
-            spark, "buckets", "doc string, tbl int, bucket string"
+        self._pin(spark)
+        return read_pinned(
+            spark, self.fs, f"{self.root}/buckets",
+            "doc string, tbl int, bucket string",
         )
 
     def record(self, sig: DataFrame) -> None:
@@ -742,13 +638,12 @@ class EmbeddingLedger:
         (caller must have materialized any candidates that read the
         ledger first).  ``sig`` is persisted across the two write
         jobs by the caller (exchange reuse never spans writes)."""
-        spark = sig.sparkSession
-        if not self._check_meta(spark):
-            _write_meta(self, spark, ("dim", "bits", "tables", "seed"))
-        sig.write.mode("append").parquet(f"{self.root}/vecs")
-        _embedding_bucket_keys(sig, self.planes()).write.mode(
-            "append"
-        ).parquet(f"{self.root}/buckets")
+        self._pin(sig.sparkSession, create=True)
+        append(sig, f"{self.root}/vecs")
+        append(
+            _embedding_bucket_keys(sig, self.planes()),
+            f"{self.root}/buckets",
+        )
 
 
 def _embedding_bucket_keys(sig: DataFrame, planes: list) -> DataFrame:
@@ -798,63 +693,17 @@ def cross_increment_embedding_duplicates(
     vectors always agree on every table; near-pairs at cos ≥ 0.95
     agree on ≥1 of 4 tables with the measured probability ≈ 0.9+),
     verification EXACT against the stored vectors (prior embeddings
-    fetched by doc, never recomputed).  Same crash ordering as every
-    other family: candidates materialize BEFORE the append."""
+    fetched by doc, never recomputed)."""
     from .similarity import cosine
 
-    spark = df.sparkSession
     own_sig = sig is None
-    if own_sig:
-        sig = embedding_sigs(df, id_col, vec_col)
-        if update:
-            sig = sig.persist()
-    prior_buckets = ledger.buckets_dim(spark)
-    if prior_buckets is None:
-        out = spark.createDataFrame(
-            [], "doc_new string, doc_prior string, cos double"
-        )
-    else:
-        mine = _embedding_bucket_keys(sig, ledger.planes())
-        cands = (
-            mine.alias("n")
-            .join(
-                prior_buckets.alias("p"),
-                (F.col("n.tbl") == F.col("p.tbl"))
-                & (F.col("n.bucket") == F.col("p.bucket")),
-            )
-            .select(
-                F.col("n.doc").alias("doc_new"),
-                F.col("p.doc").alias("doc_prior"),
-            )
-            .distinct()
-        )
-        prior_vecs = ledger.vecs_dim(spark)
-        out = (
-            cands.join(sig.alias("n"), cands["doc_new"] == F.col("n.doc"))
-            .join(
-                prior_vecs.alias("p"),
-                cands["doc_prior"] == F.col("p.doc"),
-            )
-            .select(
-                "doc_new",
-                "doc_prior",
-                cosine(F.col("n.vec"), F.col("p.vec")).alias("cos"),
-            )
-            .where(F.col("cos") >= threshold)
-        )
-        if update:
-            # materialize BEFORE the ledger grows (a recompute after
-            # the append would self-collide); the cache then belongs
-            # to the CALLER — release contract (r08): unpersist the
-            # returned frame once consumed.  Probe-only calls
-            # (update=False) return an UNPERSISTED frame: recompute
-            # against the unchanged ledger is safe, and batch drivers
-            # (run_resumable) fold it into their own persisted union —
-            # previously these frames stayed cached for session life.
-            out = out.persist()
-            out.count()
-    if update:
-        ledger.record(sig)
-        if own_sig:
-            sig.unpersist()
-    return out
+    return _probe_history(
+        ledger, embedding_sigs(df, id_col, vec_col) if own_sig else sig,
+        cache_sig=own_sig, update=update,
+        keys_dim=ledger.buckets_dim, sigs_dim=ledger.vecs_dim,
+        bucket=lambda s: _embedding_bucket_keys(s, ledger.planes()),
+        keys=("tbl", "bucket"),
+        score=cosine(F.col("n.vec"), F.col("p.vec")).alias("cos"),
+        keep=F.col("cos") >= threshold,
+        empty="doc_new string, doc_prior string, cos double",
+    )

@@ -485,3 +485,250 @@ def test_key_ledger_compaction(spark, tmp_path):
     cross_increment_dup_violations(fresh, spec, ledger)
     assert len(ledger.fs.list_files(path)) >= 2
     assert ledger.compact(spark, "images", "image_id") >= 2
+
+
+def _tree(root):
+    """{relative dir: data-file suffixes} under ``root`` — hidden
+    checksum files and Spark's ``_SUCCESS`` markers left out."""
+    out = {}
+    for d, _, files in os.walk(root):
+        rel = os.path.relpath(d, root)
+        out[rel] = {
+            "." + f.rsplit(".", 1)[-1]
+            for f in files if not f.startswith((".", "_"))
+        }
+    return out
+
+
+def test_ledger_on_disk_layout(spark, tmp_path):
+    """Every persisted store records once into its documented layout:
+    sub-directory names, the meta/vmeta parameter files, the
+    table/label and table/column paths (labels rewrite '/' → '_' and
+    ',' → '+'), and parquet part files.  Roots written by earlier
+    versions must keep opening, so this tree must never move."""
+    from python_extended_json_schema_validator_spark.manifest import KeyLedger
+    from python_extended_json_schema_validator_spark.pipeline.cardinality_ledger import (
+        HllLedger,
+    )
+    from python_extended_json_schema_validator_spark.pipeline.curation import (
+        QuotaLedger,
+    )
+    from python_extended_json_schema_validator_spark.pipeline.drift_ledger import (
+        QuantileLedger,
+    )
+    from python_extended_json_schema_validator_spark.pipeline.incremental_neardup import (
+        AudioLedger, EmbeddingLedger, MinHashLedger, PhashLedger, VideoLedger,
+    )
+
+    root = str(tmp_path)
+    PartitionManifest(f"{root}/manifest").record(spark.createDataFrame(
+        [("p0", 3, 1, 1)],
+        "partition string, n_rows long, n_failed long, n_violations long",
+    ))
+    KeyLedger(f"{root}/keys").record(
+        spark.createDataFrame([("k1",), ("k2",)], "__key string"),
+        "t", "a/b,c",
+    )
+    QuotaLedger(f"{root}/quota").record(
+        spark.createDataFrame([("en", 2)], "lang string, kept long")
+    )
+    MinHashLedger(f"{root}/minhash").record(spark.createDataFrame(
+        [("d1", *[f"x{i}" for i in range(8)])],
+        "doc string, " + ", ".join(f"h{i} string" for i in range(8)),
+    ))
+    sig = spark.createDataFrame([("d1", 12345)], "doc string, phash long")
+    PhashLedger(f"{root}/phash").record(sig)
+    AudioLedger(f"{root}/audio").record(sig)
+    VideoLedger(f"{root}/video").record(sig)
+    EmbeddingLedger(f"{root}/emb", dim=3).record(spark.createDataFrame(
+        [("d1", [1.0, 0.0, 0.0])], "doc string, vec array<double>"
+    ))
+    QuantileLedger(f"{root}/drift").record(
+        spark.createDataFrame([(1.0, 2.0)], "p10 double, p90 double"),
+        "t", "x", 1,
+    )
+    hll = HllLedger(f"{root}/hll")
+    hll.record(
+        hll.sketch(spark.createDataFrame([("a",), ("b",)], "v string"), "v"),
+        "t", "v", 1,
+    )
+
+    pq = {".parquet"}
+    assert _tree(root) == {
+        ".": set(),
+        "manifest": pq,
+        "keys": set(), "keys/t": set(), "keys/t/a_b+c": pq,
+        "quota": pq,
+        "minhash": set(), "minhash/meta": pq, "minhash/sigs": pq,
+        "minhash/bands": pq,
+        "phash": set(), "phash/meta": pq, "phash/sigs": pq,
+        "phash/blocks": pq,
+        "audio": set(), "audio/meta": pq, "audio/sigs": pq,
+        "audio/blocks": pq,
+        "video": set(), "video/vmeta": pq, "video/meta": pq,
+        "video/sigs": pq, "video/blocks": pq,
+        "emb": set(), "emb/meta": pq, "emb/vecs": pq, "emb/buckets": pq,
+        "drift": set(), "drift/t": set(), "drift/t/x": pq,
+        "hll": set(), "hll/t": set(), "hll/t/v": pq,
+    }
+
+
+def test_failed_append_publishes_nothing(spark, tmp_path):
+    """Kill point on the ledger primitive: an append whose Spark job
+    dies partway (one task's UDF raises while the others commit)
+    publishes no part file — the pinned read and next_seq are
+    unchanged — and a retried append then lands normally."""
+    from python_extended_json_schema_validator_spark.ledger import (
+        LocalFS, append, next_seq, read_pinned,
+    )
+
+    fs, path = LocalFS(), str(tmp_path / "snap")
+    append(spark.range(20).select(
+        F.lit(1).cast("long").alias("__seq"), "id"
+    ), path)
+    before = fs.list_files(path)
+    assert next_seq(spark, fs, path) == 2
+
+    @F.udf("long")
+    def dies_on_13(i):
+        if i == 13:
+            raise RuntimeError("killed mid-append")
+        return i
+
+    def increment(ident):
+        return spark.range(0, 40, 1, 4).select(
+            F.lit(2).cast("long").alias("__seq"), ident.alias("id")
+        )
+
+    with pytest.raises(Exception, match="killed mid-append"):
+        append(increment(dies_on_13("id")), path)
+    assert fs.list_files(path) == before
+    assert next_seq(spark, fs, path) == 2
+    assert read_pinned(spark, fs, path).count() == 20
+
+    append(increment(F.col("id")), path)
+    assert next_seq(spark, fs, path) == 3
+    assert read_pinned(spark, fs, path).count() == 60
+
+
+def test_run_resumable_killed_after_manifest_commit(spark, tmp_path, monkeypatch):
+    """Kill point between the manifest commit and the first ledger
+    append: the re-run finds nothing pending (no self-collision), and
+    the killed increment's keys and sketches never reach the ledgers —
+    the documented bounded false negative: a later re-send of its rows
+    is missed, while re-sends of earlier increments still flag."""
+    from python_extended_json_schema_validator_spark.manifest import (
+        KeyLedger, cross_increment_dup_violations,
+    )
+    from python_extended_json_schema_validator_spark.payload.validate import (
+        image_table_spec,
+    )
+    from python_extended_json_schema_validator_spark.pipeline.incremental_neardup import (
+        MinHashLedger, cross_increment_near_duplicates,
+    )
+
+    def inc(lo, hi, part):
+        return (
+            synth.images_from_range(spark, hi, partitions=2)
+            .where(f"image_id > 'img{lo - 1:08d}'")
+            .withColumn("part", F.lit(part))
+            .withColumn("caption", F.concat_ws(
+                " ", *[F.concat(F.lit(w), "image_id") for w in "vwxyz"]
+            ))
+        )
+
+    manifest = PartitionManifest(str(tmp_path / "man"))
+    keys = KeyLedger(str(tmp_path / "keys"))
+    sketches = MinHashLedger(str(tmp_path / "nd"), num_hashes=8)
+    kwargs = dict(key_ledger=keys, neardup_ledger=sketches)
+    formats = synth.formats_dim(spark)
+
+    def recorded():
+        return (
+            {r[0] for r in keys.dim(spark, "images", "image_id").collect()},
+            {r.doc for r in sketches.sigs_dim(spark).collect()},
+        )
+
+    run_resumable(inc(1, 20, "a").cache(), formats, manifest, **kwargs)
+    inc1_ids = {f"img{k:08d}" for k in range(1, 21)}
+    # canonical keys of atomic strings are their compact JSON form
+    inc1 = ({f'"{i}"' for i in inc1_ids}, inc1_ids)
+    assert recorded() == inc1
+
+    commit = manifest.record
+
+    def commit_then_die(*args, **kw):
+        commit(*args, **kw)
+        raise RuntimeError("killed after the manifest commit")
+
+    inc2 = inc(21, 40, "b").cache()
+    monkeypatch.setattr(manifest, "record", commit_then_die)
+    with pytest.raises(RuntimeError, match="killed after"):
+        run_resumable(inc2, formats, manifest, **kwargs)
+    monkeypatch.undo()
+
+    v, m, _ = run_resumable(inc2, formats, manifest, **kwargs)
+    assert m.count() == 0 and v.count() == 0
+    assert recorded() == inc1
+
+    # a later increment re-sending ids 1..5 (inc1) and 21..25 (inc2):
+    # only the inc1 re-sends flag — inc2's keys were lost with the crash
+    resend = inc(1, 25, "c").where(
+        "image_id <= 'img00000005' or image_id > 'img00000020'"
+    )
+    pk = cross_increment_dup_violations(
+        resend, image_table_spec(), keys, update=False
+    ).where("constraint_id = 'pk:image_id'")
+    assert {r.row_id for r in pk.collect()} == {
+        f"img{k:08d}" for k in range(1, 6)
+    }
+    nd = cross_increment_near_duplicates(
+        resend, "image_id", sketches, text_col="caption", update=False
+    )
+    assert {r.doc_new for r in nd.collect()} == {
+        f"img{k:08d}" for k in range(1, 6)
+    }
+
+
+def test_minhash_record_killed_between_sigs_and_bands(spark, tmp_path, monkeypatch):
+    """Kill point inside MinHashLedger.record, after the sigs append
+    and before the bands append: the orphan signatures are never a
+    candidate (candidates come from bands only), so a later probe
+    neither raises nor reports a false positive."""
+    from python_extended_json_schema_validator_spark.pipeline import (
+        incremental_neardup as nd,
+    )
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "id string, text string")
+
+    def text(tag):
+        return " ".join(f"{tag}{i}" for i in range(12))
+
+    led = nd.MinHashLedger(str(tmp_path / "nd"), num_hashes=8)
+    nd.record_sketches(docs([("a1", text("alpha")), ("a2", text("beta"))]),
+                       "id", led)
+
+    def killed(*args, **kw):
+        raise RuntimeError("killed between the sigs and bands appends")
+
+    monkeypatch.setattr(nd.dedup, "band_buckets", killed)
+    with pytest.raises(RuntimeError, match="killed between"):
+        nd.record_sketches(
+            docs([("b1", text("gamma")), ("b2", text("delta"))]), "id", led
+        )
+    monkeypatch.undo()
+    assert {r.doc for r in led.sigs_dim(spark).collect()} == {
+        "a1", "a2", "b1", "b2"
+    }
+    assert {r.doc for r in led.bands_dim(spark).collect()} == {"a1", "a2"}
+
+    probe = docs([("c1", text("alpha")), ("c2", text("gamma")),
+                  ("c3", text("omega"))])
+    got = {
+        (r.doc_new, r.doc_prior, r.est_jaccard)
+        for r in nd.cross_increment_near_duplicates(
+            probe, "id", led, update=False
+        ).collect()
+    }
+    assert got == {("c1", "a1", 1.0)}
